@@ -19,14 +19,9 @@ import graft.source.{NetCdf, NetCdfSource}
   *
   *   config validate (S5/J5)            → ConfigRegistry
   *   hemisphere + CRS + bands (P1/P2/P9)→ NetCdfSource.manifest
-  *
-  * The reference's per-slice loops become set-oriented grouping here:
-  * time-slice / leadtime-slice / band selection (P4/P5/P6) are the
-  * `groupBy(time_idx)` fan-out, the `leadtime_idx === 0` thumbnail
-  * filter, and the first-band election below — SURVEY §2.2's "no loop
-  * at all" mapping. Item↔catalog attachment (J7) is the
-  * `collection`/`item_id` fk columns; the tree shape only materializes
-  * in the JSON sink.
+  *   tidy scanlines (P1/P3)             → NetCdfSource.tidy, the DSv2
+  *                                        `netcdf` reader (splits
+  *                                        oversized files)
   *   bbox + geometry (A1/F11/F12)       → coord agg + Geo.projToGeo
   *   per-init item construction (F5/F6) → Scalars id/time functions
   *   per-init netCDF slices (K1, P8)    → foreachPartition NetCdf.write
@@ -35,6 +30,14 @@ import graft.source.{NetCdf, NetCdfSource}
   *   asset rows + file info (E1/E2/E3/J6) → binaryFile manifest join
   *   get-or-create vs existing (J1/J2)  → anti-join / extent merge
   *   catalog tree (K4, F8)              → StacJsonSink
+  *
+  * The reference's per-slice loops become set-oriented grouping here:
+  * time-slice / leadtime-slice / band selection (P4/P5/P6) are the
+  * `groupBy(time_idx)` fan-out, the `leadtime_idx === 0` thumbnail
+  * filter, and the first-band election below — SURVEY §2.2's "no loop
+  * at all" mapping. Item↔catalog attachment (J7) is the
+  * `collection`/`item_id` fk columns; the tree shape only materializes
+  * in the JSON sink.
   */
 object Preprocess {
 
@@ -324,10 +327,6 @@ object Preprocess {
       }
     }
 
-  /** K1: one .nc per (file, init) holding every band's slice, written
-    * inside the tasks; existence-skip unless overwrite (P8, ref
-    * generator.py:906-909 analogue for netCDF).
-    */
   /** P8 fast path (r21): drop targets whose output file already exists
     * BEFORE the data join — on the idempotent re-run path every sink
     * previously shuffled and sorted the FULL tidy relation by out_path
@@ -347,6 +346,10 @@ object Preprocess {
       target.filter(missing(col("out_path")))
     }
 
+  /** K1: one .nc per (file, init) holding every band's slice, written
+    * inside the tasks; existence-skip unless overwrite (P8, ref
+    * generator.py:906-909 analogue for netCDF).
+    */
   private def writeSlices(spark: SparkSession, tidy: DataFrame,
                           inits: DataFrame, opts: Options): Long = {
     import spark.implicits._
@@ -467,17 +470,16 @@ object Preprocess {
     val statsByBand = stats.select(col("path"), col("time_idx"),
       col("leadtime_idx"), col("variable"), col("stat_min"), col("stat_max"),
       col("stat_mean"), col("stat_stddev"), col("valid_percent"))
-    val pending = pendingTargets(targets, opts.overwrite)
+    // the pending probe runs once: the stats ride on the data rows'
+    // own keys, so a retried probe can never split a COG's data rows
+    // from its band statistics
     val rows = tidy
-      .join(pending, Seq("path", "time_idx", "leadtime_idx"))
+      .join(pendingTargets(targets, opts.overwrite),
+        Seq("path", "time_idx", "leadtime_idx"))
+      .join(statsByBand, Seq("path", "time_idx", "leadtime_idx", "variable"))
       .select(col("out_path"), col("variable"), col("y_idx"), col("y"),
-        col("xs"), col("values"))
-      .join(statsByBand
-        .join(pending, Seq("path", "time_idx", "leadtime_idx"))
-        .select(col("out_path"), col("variable"), col("stat_min"),
-          col("stat_max"), col("stat_mean"), col("stat_stddev"),
-          col("valid_percent")),
-        Seq("out_path", "variable"))
+        col("xs"), col("values"), col("stat_min"), col("stat_max"),
+        col("stat_mean"), col("stat_stddev"), col("valid_percent"))
     val overwrite = opts.overwrite
     val compressOn = opts.compress
     val reprojectOn = opts.reproject

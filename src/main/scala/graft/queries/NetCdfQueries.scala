@@ -134,8 +134,8 @@ object NetCdfQueries {
 
   private def bandStatsQuery(s: org.apache.spark.sql.SparkSession,
                              tag: String, globs: String*) = {
-    // through the DataSource V2 format (same tidy schema as
-    // NetCdfSource.tidy; NetCdfV2Spec pins parity between the two paths)
+    // through the DataSource V2 format, the one tidy reader
+    // (NetCdfSource.tidy and Preprocess scan through it too)
     val tidy = s.read.format("netcdf").load(globs: _*)
     oracleDump(s, tag, tidy.select(
       regexp_extract(col("path"), "([^/]+)$", 1).as("file"),

@@ -1,10 +1,10 @@
 package graft.source
 
 /** Format-neutral view of a gridded forecast file — the single seam the
-  * scan paths (NetCdfSource.manifest / tidy, the DSv2 `netcdf` format)
-  * decode through, so classic CDF-1/2 and netCDF-4/HDF5 inputs flow
-  * into the SAME tidy schema and the same downstream plans (S1
-  * completion; the reference opens either transparently via xarray,
+  * scans decode through (NetCdfSource.manifest and the one tidy reader,
+  * the DSv2 `netcdf` format), so classic CDF-1/2 and netCDF-4/HDF5
+  * inputs flow into the SAME tidy schema and the same downstream plans
+  * (S1 completion; the reference opens either transparently via xarray,
   * ref generator.py:485,661).
   *
   * Dispatch is by magic number: `CDF\x01`/`\x02` → [[Classic]],

@@ -1,14 +1,15 @@
 package graft.source
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+import org.apache.spark.unsafe.types.UTF8String
 
-/** S1/P1/P2 — NetCDF scan as a Spark source: `binaryFile` file-source →
-  * per-task classic-format decode → tidy rows. The decode happens inside
-  * the executors (flatMap over file rows), so a directory of forecast
-  * files parallelizes per file exactly like the reference's per-file
-  * loop (X2) — but distributed, and with Catalyst able to prune/filter
-  * the tidy output downstream.
+/** S1/P1/P2 — NetCDF scan as a Spark source. The tidy scan is the DSv2
+  * `netcdf` format ([[graft.source.v2.NetCdfDataSource]]): one task per
+  * file, or per band variable / leadtime for files past `split_bytes`,
+  * decoding through [[decodeTidy]] inside the executors. The metadata
+  * and record scans (`manifest`, `enumLabels`, `compoundRecords`,
+  * `vlenRows`) run one task per file through [[perFile]].
   *
   * Schema notes (SURVEY §1.4): one row per (variable, time_idx,
   * leadtime_idx, y) scanline with an `xs` array payload — the shape that
@@ -35,7 +36,8 @@ object NetCdfSource {
     * empty dataset); a matched directory expands to its visible files
     * (the listing binaryFile used to do).
     */
-  private def resolveGlob(spark: SparkSession, glob: String): Seq[String] = {
+  private[source] def resolveGlob(spark: SparkSession, glob: String)
+      : Seq[String] = {
     val conf = spark.sessionState.newHadoopConf()
     glob.split(",").toSeq.flatMap { p =>
       val hp = new org.apache.hadoop.fs.Path(p)
@@ -168,26 +170,28 @@ object NetCdfSource {
   /** Tidy decode of the 4-D band variables: one row per (variable,
     * time_idx, leadtime_idx, y scanline). Coordinate VALUES are resolved
     * through P1 and unit-normalized through P3 (km / "1000 meter" → m ×
-    * 1000, ref generator.py:533-553) at decode time.
+    * 1000, ref generator.py:533-553) at decode time. A thin call into
+    * the DSv2 `netcdf` format, which splits oversized files and prunes
+    * to a header-only read when no payload column is used.
     */
-  def tidy(spark: SparkSession, glob: String): DataFrame = {
-    import spark.implicits._
-    perFile(spark, glob) { (path, g) =>
-      decodeTidy(path, g, None, None, None)
-    }.toDF("path", "variable", "time_idx", "time", "leadtime_idx",
-        "leadtime", "y_idx", "y", "xs", "values")
-  }
+  def tidy(spark: SparkSession, glob: String): DataFrame =
+    spark.read.format("netcdf").load(glob)
 
-  /** Format-neutral tidy decode over an already-opened [[GridFile]] —
-    * the seam the DSv2 reader uses so >2 GiB HDF5 inputs stream through
-    * positioned reads instead of a whole-file buffer.
+  /** Format-neutral tidy decode over an already-opened [[GridFile]],
+    * the DSv2 reader's row stream, in Spark's internal value types so
+    * the reader hands them on without another copy: strings as
+    * UTF8String, scanlines written straight into UnsafeArrayData, and
+    * one `xs` array shared by every row of a file. `payload = false` is
+    * the header-only mode: same rows, coordinates and layout check, but
+    * `xs`/`values` are null and the grid bytes are never read.
     */
   private[source] def decodeTidy(path: String, g: GridFile,
       varFilter: Option[Set[String]],
       tFilter: Option[Int],
-      lFilter: Option[Int])
-      : Iterator[(String, String, Int, Double, Int, Double, Int, Double,
-                  Array[Double], Array[Double])] = {
+      lFilter: Option[Int],
+      payload: Boolean)
+      : Iterator[(UTF8String, UTF8String, Int, Double, Int, Double, Int,
+                  Double, UnsafeArrayData, UnsafeArrayData)] = {
     val names = g.varNames
     def coordData(cands: Seq[String]): (String, Array[Double]) = {
       val n = findCoord(names, cands).getOrElse(
@@ -208,6 +212,8 @@ object NetCdfSource {
     // dominant saving when a query wants one band of many
     val bands = names.filter(g.isPayload(_, 4))
       .filter(v => varFilter.forall(_.contains(v)))
+    val pathU = UTF8String.fromString(path)
+    val rowXs = if (payload) UnsafeArrayData.fromPrimitiveArray(xs) else null
     bands.iterator.flatMap { v =>
       val dimNames = g.dimNames(v)
       require(dimNames == Seq(tName, yName, xName, lName),
@@ -217,20 +223,25 @@ object NetCdfSource {
       // HDF5 (slices outside the filter are never inflated); the cells
       // the emit loop below reads are exactly the kept slice
       val fixed = (tFilter.map(tName -> _) ++ lFilter.map(lName -> _)).toMap
-      val data = cfDecode(g, v, g.readDoublesSliced(v, fixed))
+      val data =
+        if (payload) cfDecode(g, v, g.readDoublesSliced(v, fixed)) else null
+      val vU = UTF8String.fromString(v)
       val (nt, ny, nx, nl) = (tVals.length, ys.length, xs.length, lVals.length)
       for {
         t <- (0 until nt).iterator if tFilter.forall(_ == t)
         l <- (0 until nl).iterator if lFilter.forall(_ == l)
         y <- (0 until ny).iterator
       } yield {
-        val row = new Array[Double](nx)
-        var x = 0
-        while (x < nx) {
-          row(x) = data(((t * ny + y) * nx + x) * nl + l)
-          x += 1
+        val row = if (data == null) null else {
+          val r = UnsafeArrayData.createFreshArray(nx, 8)
+          var x = 0
+          while (x < nx) {
+            r.setDouble(x, data(((t * ny + y) * nx + x) * nl + l))
+            x += 1
+          }
+          r
         }
-        (path, v, t, tVals(t), l, lVals(l), y, ys(y), xs, row)
+        (pathU, vU, t, tVals(t), l, lVals(l), y, ys(y), rowXs, row)
       }
     }
   }

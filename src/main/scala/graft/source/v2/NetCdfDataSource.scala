@@ -2,20 +2,24 @@ package graft.source.v2
 
 import java.util
 import scala.jdk.CollectionConverters._
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path => HPath}
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.util.SerializableConfiguration
 import graft.source.NetCdfSource
 
 /** DataSource V2 NetCDF source: `spark.read.format("netcdf").load(glob)`
-  * (S1 as a first-class format, SURVEY §4.1's upgrade path from the
-  * mapPartitions decode).
+  * (S1 as a first-class format, SURVEY §4.1) — the one tidy reader:
+  * `NetCdfSource.tidy`, Preprocess and the band-stats queries all scan
+  * through it.
   *
   * Planning: one input partition per file up to `split_bytes` (default
   * 256 MiB); a LARGER file fans out into one partition per band
@@ -33,7 +37,8 @@ import graft.source.NetCdfSource
   * (variable lists, coord resolution, counts) cost O(header) per file
   * exactly like the reference's metadata-only first pass
   * (get_forecast_info). Files are read through the Hadoop FileSystem
-  * API, so the same source works on HDFS/object stores.
+  * API with the session's Hadoop conf, so the same source works on
+  * HDFS/object stores.
   */
 final class NetCdfDataSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "netcdf"
@@ -52,39 +57,41 @@ object NetCdfDataSource {
     */
   val DefaultSplitBytes: Long = 256L << 20
 
-  /** The tidy scanline schema (SURVEY §1.4). */
+  /** The tidy scanline schema (SURVEY §1.4). Indices and coordinates
+    * are never null; `xs`/`values` are null only in a header-only scan,
+    * which never returns them.
+    */
   val TidySchema: StructType = new StructType()
     .add("path", StringType).add("variable", StringType)
-    .add("time_idx", IntegerType).add("time", DoubleType)
-    .add("leadtime_idx", IntegerType).add("leadtime", DoubleType)
-    .add("y_idx", IntegerType).add("y", DoubleType)
-    .add("xs", ArrayType(DoubleType)).add("values", ArrayType(DoubleType))
-
-  def resolvePaths(props: Map[String, String]): Seq[String] = {
-    val raw = props.get("paths")
-      .map(p => p.stripPrefix("[").stripSuffix("]").split(",").toSeq
-        .map(_.trim.stripPrefix("\"").stripSuffix("\"")))
-      .orElse(props.get("path").map(Seq(_)))
-      .getOrElse(throw new IllegalArgumentException("netcdf: no path given"))
-    val conf = org.apache.spark.sql.SparkSession.active
-      .sessionState.newHadoopConf()
-    raw.flatMap { p =>
-      val hp = new HPath(p)
-      val fs = hp.getFileSystem(conf)
-      Option(fs.globStatus(hp)).map(_.toSeq).getOrElse(Seq.empty)
-        .filter(_.isFile).map(_.getPath.toString)
-    }.sorted
-  }
+    .add("time_idx", IntegerType, nullable = false)
+    .add("time", DoubleType, nullable = false)
+    .add("leadtime_idx", IntegerType, nullable = false)
+    .add("leadtime", DoubleType, nullable = false)
+    .add("y_idx", IntegerType, nullable = false)
+    .add("y", DoubleType, nullable = false)
+    .add("xs", ArrayType(DoubleType, containsNull = false))
+    .add("values", ArrayType(DoubleType, containsNull = false))
 }
 
+/** Input files are resolved once, when the table is loaded, through
+  * [[NetCdfSource.resolveGlob]]: `path` may be a comma-joined list of
+  * globs, files or directories, and a pattern that matches nothing fails.
+  */
 private[v2] final class NetCdfTable(props: Map[String, String])
     extends Table with SupportsRead {
+  private val files: Seq[String] = NetCdfSource.resolveGlob(
+    org.apache.spark.sql.SparkSession.active,
+    props.get("paths")
+      .map(_.stripPrefix("[").stripSuffix("]").split(",")
+        .map(_.trim.stripPrefix("\"").stripSuffix("\"")).mkString(","))
+      .orElse(props.get("path"))
+      .getOrElse(throw new IllegalArgumentException("netcdf: no path given")))
   override def name(): String = s"netcdf(${props.getOrElse("path", "…")})"
   override def schema(): StructType = NetCdfDataSource.TidySchema
   override def capabilities(): util.Set[TableCapability] =
     util.EnumSet.of(TableCapability.BATCH_READ)
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new NetCdfScanBuilder(props)
+    new NetCdfScanBuilder(files, props)
 }
 
 /** Pushable predicates, extracted driver-side into plain serializable
@@ -100,7 +107,8 @@ private[v2] final case class NetCdfFilters(
     leadtimeIdx.map(l => s"leadtime_idx=$l")).flatten.mkString(", ")
 }
 
-private[v2] final class NetCdfScanBuilder(props: Map[String, String])
+private[v2] final class NetCdfScanBuilder(files: Seq[String],
+                                          props: Map[String, String])
     extends ScanBuilder with SupportsPushDownRequiredColumns
     with SupportsPushDownFilters {
   import org.apache.spark.sql.sources._
@@ -128,11 +136,12 @@ private[v2] final class NetCdfScanBuilder(props: Map[String, String])
     }
     val t = pushed.collectFirst { case EqualTo("time_idx", v: Int) => v }
     val l = pushed.collectFirst { case EqualTo("leadtime_idx", v: Int) => v }
-    new NetCdfScan(props, required, NetCdfFilters(vars, t, l))
+    new NetCdfScan(files, props, required, NetCdfFilters(vars, t, l))
   }
 }
 
-private[v2] final class NetCdfScan(props: Map[String, String],
+private[v2] final class NetCdfScan(files: Seq[String],
+                                   props: Map[String, String],
                                    required: StructType,
                                    filters: NetCdfFilters)
     extends Scan with Batch {
@@ -141,16 +150,17 @@ private[v2] final class NetCdfScan(props: Map[String, String],
   override def description(): String =
     s"netcdf scan, columns=[${required.fieldNames.mkString(",")}]" +
       (if (filters.describe.nonEmpty) s", pushed=[${filters.describe}]" else "")
-  private def needPayload =
+  // header-only when no payload column is required: the grid bytes
+  // are never decoded
+  private val needPayload =
     required.fieldNames.contains("values") || required.fieldNames.contains("xs")
 
   override def planInputPartitions(): Array[InputPartition] = {
-    val paths = NetCdfDataSource.resolvePaths(props)
     val splitBytes = props.get("split_bytes").map(_.toLong)
       .getOrElse(NetCdfDataSource.DefaultSplitBytes)
     val conf = org.apache.spark.sql.SparkSession.active
       .sessionState.newHadoopConf()
-    paths.flatMap { p =>
+    files.flatMap { p =>
       val hp = new HPath(p)
       val fs = hp.getFileSystem(conf)
       // header-only scans never split: the payload is never read, so
@@ -190,8 +200,15 @@ private[v2] final class NetCdfScan(props: Map[String, String],
     } finally src.close()
   }
 
-  override def createReaderFactory(): PartitionReaderFactory =
-    new NetCdfReaderFactory(required.fieldNames, filters)
+  override def createReaderFactory(): PartitionReaderFactory = {
+    val spark = org.apache.spark.sql.SparkSession.active
+    // session Hadoop conf rides to the tasks (spark.hadoop.* — custom
+    // schemes, object-store credentials); a bare executor-side
+    // Configuration() would see only classpath defaults
+    val conf = spark.sparkContext.broadcast(
+      new SerializableConfiguration(spark.sessionState.newHadoopConf()))
+    new NetCdfReaderFactory(required.fieldNames, needPayload, filters, conf)
+  }
 }
 
 /** One scan task: a whole file, or — for split oversized files — one
@@ -201,8 +218,9 @@ private[v2] final case class NetCdfInputPartition(
     path: String, variable: Option[String] = None,
     leadtimeIdx: Option[Int] = None) extends InputPartition
 
-private[v2] final class NetCdfReaderFactory(requiredCols: Array[String],
-                                            filters: NetCdfFilters)
+private[v2] final class NetCdfReaderFactory(
+    requiredCols: Array[String], payload: Boolean, filters: NetCdfFilters,
+    conf: Broadcast[SerializableConfiguration])
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[NetCdfInputPartition]
@@ -211,81 +229,39 @@ private[v2] final class NetCdfReaderFactory(requiredCols: Array[String],
       p.variable.map(Set(_)).orElse(filters.variables),
       filters.timeIdx,
       p.leadtimeIdx.orElse(filters.leadtimeIdx))
-    new NetCdfPartitionReader(p.path, requiredCols, eff)
+    new NetCdfPartitionReader(p.path, requiredCols, payload, eff,
+      conf.value.value)
   }
 }
 
 private[v2] final class NetCdfPartitionReader(path: String,
                                               requiredCols: Array[String],
-                                              filters: NetCdfFilters)
+                                              payload: Boolean,
+                                              filters: NetCdfFilters,
+                                              conf: Configuration)
     extends PartitionReader[InternalRow] {
 
-  private val needPayload =
-    requiredCols.contains("values") || requiredCols.contains("xs")
+  // tidy tuple slot of each required column, in output order
+  private val slots: Array[Int] =
+    requiredCols.map(NetCdfDataSource.TidySchema.fieldIndex)
 
   // held open for the lazy row iterator; released in close()
   private var source: graft.source.FsByteSource = _
 
   private val rows: Iterator[InternalRow] = {
-    val conf = new org.apache.hadoop.conf.Configuration()
     val hp = new HPath(path)
-    val fs = FileSystem.get(hp.toUri, conf)
     // positioned-read source: HDF5 inputs of ANY size stream header
     // ranges + chunk byte-ranges (no whole-file buffer, no 2 GiB
     // ceiling); classic CDF buffers inside GridFile.open with its own
     // explicit size contract
-    source = new graft.source.FsByteSource(fs, hp)
-    val g = graft.source.GridFile.open(source)
-    if (needPayload) {
-      NetCdfSource.decodeTidy(path, g, filters.variables,
-        filters.timeIdx, filters.leadtimeIdx).map(project)
-    } else {
-      // header-only fast path: the grid payload is never decoded
-      headerRows(g).map(project)
-    }
+    source = new graft.source.FsByteSource(hp.getFileSystem(conf), hp)
+    NetCdfSource.decodeTidy(path, graft.source.GridFile.open(source),
+      filters.variables, filters.timeIdx, filters.leadtimeIdx, payload)
+      .map(project)
   }
 
-  /** Header-only row stream: same row grain as the full decode, but all
-    * values come from coords/shape — no payload read.
-    */
-  private def headerRows(g: graft.source.GridFile) = {
-    val names = g.varNames
-    def coord(cands: Seq[String]): Array[Double] = {
-      val n = NetCdfSource.findCoord(names, cands).getOrElse(
-        throw new IllegalArgumentException(s"no coord among $cands in $path"))
-      g.readDoubles(n)
-    }
-    val yName = NetCdfSource.findCoord(names, NetCdfSource.YCandidates).get
-    val yUnits = g.varAttrText(yName, "units").getOrElse("")
-    val yScale = if (yUnits == "km" || yUnits == "1000 meter") 1000.0 else 1.0
-    val (ts, ls, ys) =
-      (coord(NetCdfSource.TimeCandidates), coord(NetCdfSource.LeadCandidates),
-        coord(NetCdfSource.YCandidates).map(_ * yScale))
-    for {
-      v <- names.filter(g.isPayload(_, 4)).iterator
-        if filters.variables.forall(_.contains(v))
-      t <- ts.indices.iterator if filters.timeIdx.forall(_ == t)
-      l <- ls.indices.iterator if filters.leadtimeIdx.forall(_ == l)
-      y <- ys.indices.iterator
-    } yield (path, v, t, ts(t), l, ls(l), y, ys(y), null, null)
-  }
-
-  private def project(t: (String, String, Int, Double, Int, Double, Int,
-                          Double, Array[Double], Array[Double])): InternalRow = {
-    val full: Map[String, Any] = Map(
-      "path" -> UTF8String.fromString(t._1),
-      "variable" -> UTF8String.fromString(t._2),
-      "time_idx" -> t._3, "time" -> t._4,
-      "leadtime_idx" -> t._5, "leadtime" -> t._6,
-      "y_idx" -> t._7, "y" -> t._8,
-      "xs" -> Option(t._9)
-        .map(a => org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(a))
-        .orNull,
-      "values" -> Option(t._10)
-        .map(a => org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(a))
-        .orNull)
-    InternalRow.fromSeq(requiredCols.toSeq.map(full))
-  }
+  private def project(t: Product): InternalRow =
+    new GenericInternalRow(slots.map(t.productElement))
 
   override def next(): Boolean = rows.hasNext
   override def get(): InternalRow = rows.next()

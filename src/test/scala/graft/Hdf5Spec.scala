@@ -87,14 +87,13 @@ class Hdf5Spec extends SparkSpec {
       .filter(org.apache.spark.sql.functions.col("variable") === "sic_mean")
     val rows = tidy.collect()
     assert(rows.length === ny)
-    val fullRows = NetCdfSource.tidy(spark, s"$dir/*.nc")
-      .filter(org.apache.spark.sql.functions.col("leadtime_idx") === 4)
-      .filter(org.apache.spark.sql.functions.col("variable") === "sic_mean")
-      .collect()
+    // closed form: the fixture grid's leadtime-4 scanlines, y order
+    val mean = vars.find(_.name == "sic_mean").get.data
     def key(r: org.apache.spark.sql.Row) = r.getInt(r.fieldIndex("y_idx"))
-    val a = rows.sortBy(key).map(_.getSeq[Double](9).map(d => if (d.isNaN) -1 else d))
-    val b = fullRows.sortBy(key).map(_.getSeq[Double](9).map(d => if (d.isNaN) -1 else d))
-    assert(a.toSeq === b.toSeq)
+    val a = rows.sortBy(key).map(r => FixtureRows.nanSafe(r.getSeq[Double](9)))
+    val b = (0 until ny).map(y =>
+      FixtureRows.nanSafe(FixtureRows.scanline(mean, ny, nx, nl, 0, y, 4)))
+    assert(a.toSeq === b)
   }
 
   test("GridFile facade dispatches by magic and agrees across formats") {

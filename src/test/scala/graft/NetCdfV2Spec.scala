@@ -4,13 +4,31 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import graft.source.NetCdfFixture
 
-/** DataSource V2 "netcdf" format: short-name registration, parity with
-  * the mapPartitions decode, and the header-only pruning fast path.
+/** Closed-form tidy rows of [[NetCdfFixture.spec]]: the expected
+  * scanlines the readers are checked against.
+  */
+object FixtureRows {
+  /** The (t, y, l) scanline of a (t, y, x, l)-ordered fixture grid. */
+  def scanline(data: Array[Double], ny: Int, nx: Int, nl: Int,
+               t: Int, y: Int, l: Int): Seq[Double] =
+    (0 until nx).map(x => data(((t * ny + y) * nx + x) * nl + l))
+
+  /** NaN-safe comparison form (NaN != NaN under ===). */
+  def nanSafe(s: Seq[Double]): Seq[Double] =
+    s.map(d => if (d.isNaN) -1.0 else d)
+}
+
+/** DataSource V2 "netcdf" format — the one tidy reader: short-name
+  * registration, the decode against the fixture's closed-form arrays,
+  * path resolution, and the header-only pruning fast path.
   */
 class NetCdfV2Spec extends SparkSpec {
 
-  private lazy val glob: String =
-    NetCdfFixture.writeFiles(Files.createTempDirectory("graft-v2"), n = 2)
+  private lazy val dir = Files.createTempDirectory("graft-v2")
+  private lazy val glob: String = NetCdfFixture.writeFiles(dir, n = 2)
+
+  private def rowsOf(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.collect().map(_.toString).sorted.toSeq
 
   test("format(\"netcdf\") scans by short name with the tidy schema") {
     val df = spark.read.format("netcdf").load(glob)
@@ -20,18 +38,116 @@ class NetCdfV2Spec extends SparkSpec {
     assert(df.count() === 2 * 2 * 1 * 3 * 8)
   }
 
-  test("full-decode parity with the mapPartitions source") {
+  test("full decode matches the fixture's closed-form arrays") {
     val v2 = spark.read.format("netcdf").load(glob)
       .select(col("variable"), col("time_idx"), col("leadtime_idx"),
         col("y_idx"), col("y"), explode(col("values")).as("v"))
       .agg(count(lit(1)), sum(when(!isnan(col("v")), col("v"))), sum(col("y")))
       .head()
-    val v1 = graft.source.NetCdfSource.tidy(spark, glob)
-      .select(col("variable"), col("time_idx"), col("leadtime_idx"),
-        col("y_idx"), col("y"), explode(col("values")).as("v"))
-      .agg(count(lit(1)), sum(when(!isnan(col("v")), col("v"))), sum(col("y")))
-      .head()
-    assert(v2 === v1)
+    // the same three aggregates, folded over the fixture's own arrays
+    // (both files hold identical payloads; only the time coord differs)
+    val (_, _, vars) = NetCdfFixture.spec(nt = 1)
+    val ys = vars.find(_.name == "yc").get.data.map(_ * 1000) // km → m
+    val bands = vars.filter(_.dims.size == 4)
+    val cells = bands.map(_.data.length).sum
+    val vSum = bands.map(_.data.filterNot(_.isNaN).sum).sum
+    val ySum = bands.map(b => b.data.indices.map(i => ys(i / (8 * 3))).sum).sum
+    assert(v2.getLong(0) === 2L * cells)
+    assert(math.abs(v2.getDouble(1) - 2 * vSum) < 1e-9)
+    assert(math.abs(v2.getDouble(2) - 2 * ySum) < 1e-6)
+    // and every scanline exactly: values, x and y coords, time coord
+    val rows = spark.read.format("netcdf").load(glob).collect()
+    assert(rows.length === 2 * 2 * 3 * 8)
+    val xs = vars.find(_.name == "xc").get.data.map(_ * 1000).toSeq
+    rows.foreach { r =>
+      val v = r.getAs[String]("variable")
+      val (y, l) = (r.getAs[Int]("y_idx"), r.getAs[Int]("leadtime_idx"))
+      val want = FixtureRows.scanline(
+        bands.find(_.name == v).get.data, 8, 8, 3, 0, y, l)
+      assert(FixtureRows.nanSafe(r.getSeq[Double](r.fieldIndex("values"))) ===
+        FixtureRows.nanSafe(want), s"$v y=$y l=$l")
+      assert(r.getSeq[Double](r.fieldIndex("xs")) === xs)
+      assert(r.getAs[Double]("y") === ys(y))
+      assert(r.getAs[Double]("leadtime") === l.toDouble)
+      val file = r.getAs[String]("path").takeRight(5).take(2).toInt
+      assert(r.getAs[Double]("time") === file.toDouble)
+    }
+  }
+
+  test("NetCdfSource.tidy is the netcdf format: same schema and rows") {
+    val tidy = graft.source.NetCdfSource.tidy(spark, glob)
+    val v2 = spark.read.format("netcdf").load(glob)
+    assert(tidy.schema === v2.schema)
+    // the tuple-encoder schema the tidy scan has always had
+    assert(tidy.schema("time_idx").nullable === false)
+    assert(tidy.schema("values").dataType ===
+      org.apache.spark.sql.types.ArrayType(
+        org.apache.spark.sql.types.DoubleType, containsNull = false))
+    assert(rowsOf(tidy) === rowsOf(v2))
+  }
+
+  test("a path that matches nothing fails in both entry points") {
+    val missing = s"$dir/no_such_*.nc"
+    Seq[() => Any](
+      () => spark.read.format("netcdf").load(missing).count(),
+      () => graft.source.NetCdfSource.tidy(spark, missing).count(),
+      // one good and one typo'd pattern still fails
+      () => spark.read.format("netcdf").load(s"$glob,$missing").count()
+    ).foreach { scan =>
+      val e = intercept[IllegalArgumentException](scan())
+      assert(e.getMessage.contains("path does not exist"), e.getMessage)
+    }
+  }
+
+  test("comma-joined lists, multi-path loads and directories read the " +
+    "same rows as the glob") {
+    val files = Seq("forecast_00.nc", "forecast_01.nc").map(f => s"$dir/$f")
+    // a marker file beside the data is skipped by the directory listing
+    Files.write(dir.resolve("_SUCCESS"), Array.emptyByteArray)
+    val want = rowsOf(spark.read.format("netcdf").load(glob))
+    assert(want.length === 96)
+    assert(rowsOf(spark.read.format("netcdf").load(files.mkString(","))) === want)
+    assert(rowsOf(spark.read.format("netcdf").load(files: _*)) === want)
+    assert(rowsOf(spark.read.format("netcdf").load(dir.toString)) === want)
+    assert(rowsOf(graft.source.NetCdfSource.tidy(spark, files.mkString(","))) ===
+      want)
+    assert(rowsOf(graft.source.NetCdfSource.tidy(spark, dir.toString)) === want)
+  }
+
+  test("tasks read through the session Hadoop conf, not a bare " +
+    "Configuration (custom scheme, FileSystem cache off)") {
+    // the scheme is registered ONLY in the session conf, and the cache
+    // is off, so no task can borrow a driver-side FileSystem instance
+    withSQLConf(
+      "fs.graftmock.impl" -> classOf[MockObjectStoreFs].getName,
+      "fs.graftmock.impl.disable.cache" -> "true") {
+      val mock = graft.source.NetCdfSource.tidy(spark, s"graftmock:$glob")
+      val got = mock.drop("path").collect().map(_.toString).sorted.toSeq
+      assert(got === rowsOf(spark.read.format("netcdf").load(glob).drop("path")))
+      assert(mock.select("path").distinct().collect()
+        .forall(_.getString(0).startsWith("graftmock:")))
+    }
+  }
+
+  test("a header-only scan of a bad-layout file fails like a full scan") {
+    val bad = Files.createTempDirectory("graft-v2-bad")
+    val (dims, gatts, vars) = NetCdfFixture.spec(nt = 1)
+    // the band stored (time, xc, yc, leadtime): same shape, wrong layout
+    val swapped = vars.map(v =>
+      if (v.name == "sic_mean") v.copy(dims = Seq("time", "xc", "yc", "leadtime"))
+      else v)
+    Files.write(bad.resolve("bad.nc"),
+      graft.source.NetCdf.write(dims, gatts, swapped))
+    def layoutFailure(scan: => Any): Unit = {
+      val e = intercept[Exception](scan)
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(c => String.valueOf(c.getMessage)
+          .contains("unexpected band layout")), e.toString)
+    }
+    val df = spark.read.format("netcdf").load(s"$bad/*.nc")
+    layoutFailure(df.collect())                         // full decode
+    layoutFailure(df.select("variable", "y").collect()) // header-only
+    layoutFailure(df.count())                           // header-only
   }
 
   test("column pruning reaches the reader: metadata query plans a payload-free scan") {
@@ -105,10 +221,13 @@ class NetCdfV2Spec extends SparkSpec {
     val vSum = sliced
       .select(explode(col("values")).as("v"))
       .agg(sum(when(!isnan(col("v")), col("v")))).head().getDouble(0)
-    val naive = graft.source.NetCdfSource.tidy(spark, eaGlob)
-      .where("variable = 'sic_mean' and time_idx = 7")
-      .select(explode(col("values")).as("v"))
-      .agg(sum(when(!isnan(col("v")), col("v")))).head().getDouble(0)
-    assert(math.abs(vSum - naive) < 1e-9)
+    // closed form: sic_mean's t=7 slice of each file's fixture grid
+    val want = (0 until 2).map { i =>
+      val (_, _, vars) = NetCdfFixture.spec(nt = 10, tStart = i * 10.0)
+      val data = vars.find(_.name == "sic_mean").get.data
+      (0 until 8).flatMap(y => (0 until 3).flatMap(l =>
+        FixtureRows.scanline(data, 8, 8, 3, 7, y, l))).filterNot(_.isNaN).sum
+    }.sum
+    assert(math.abs(vSum - want) < 1e-9)
   }
 }
